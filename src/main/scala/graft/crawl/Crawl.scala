@@ -106,8 +106,9 @@ final class Crawl(
       val merged = DbUpdateJob.mergeSeenNewPagesOverStore(spark, u, seen,
         table.readAll(spark))
       val id = table.append(merged.toDF(), round, "update")
-      // fold this round's new keys into the bank and checkpoint it next to
-      // the snapshot, so a restarted crawl loads instead of rebuilding
+      // fold this round's new keys (generate and update deltas, one add)
+      // into the bank and checkpoint it next to the snapshot, so a
+      // restarted crawl loads instead of rebuilding
       catchUpSeenBank(seen)
       checkpointSeenBank(seen)
       u.unpersist()
@@ -138,15 +139,19 @@ final class Crawl(
   /** The seen bank for this crawl: in-memory if already held, else the
     * checkpoint next to the table, else ONE distributed build over the
     * store's raw key column (`readAll`, no view resolution — extra version
-    * keys only cost bloom bits). Always caught up to the table HEAD by
-    * folding the delta snapshots committed since the bank's state id. */
-  private def ensureSeenBank(): BloomSeen = {
-    val bank = seenBank.getOrElse {
-      val loaded = loadSeenBank().getOrElse(buildSeenBank())
-      seenBank = Some(loaded)
-      loaded
-    }
+    * keys only cost bloom bits). A loaded or built bank is caught up to the
+    * table HEAD by folding the delta snapshots committed since its state
+    * id; a held bank is not: `update` folds the round's generate and update
+    * deltas together after its commit. That leaves the round's generate
+    * delta out of the bank during the merge, which cannot change a probe:
+    * the only keys generate adds are version keys `uuid3(url + "#v" +
+    * round)`, while discovered pages probe `uuid3(url)` of URLs normalized
+    * without a `#` fragment — and bloom positives are confirmed by the
+    * exact store join anyway. */
+  private def ensureSeenBank(): BloomSeen = seenBank.getOrElse {
+    val bank = loadSeenBank().getOrElse(buildSeenBank())
     catchUpSeenBank(bank)
+    seenBank = Some(bank)
     bank
   }
 

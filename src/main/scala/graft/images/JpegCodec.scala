@@ -287,8 +287,8 @@ object JpegCodec {
 
   // --------------------------------------------------------------- decoder
 
-  private def fail(msg: String): Nothing =
-    throw new IllegalArgumentException(s"corrupt JPEG: $msg")
+  private def fail(msg: String, cause: Throwable = null): Nothing =
+    throw new IllegalArgumentException(s"corrupt JPEG: $msg", cause)
 
   /** Decoder-side Huffman table (the spec's DECODE procedure arrays). */
   private final class HuffDec(bits: Array[Int], vals: Array[Int]) {
@@ -376,12 +376,13 @@ object JpegCodec {
     * never a raw buffer underflow: u8/u16 bounds-check the header walk,
     * and any residual out-of-bounds read from a structurally invalid
     * stream (e.g. a Huffman value table shorter than its code count) is
-    * rethrown as the same contract exception here. */
+    * rethrown as the same contract exception here, with the original as its
+    * cause so a decoder bug misread as corruption stays diagnosable. */
   def decodeRgb(bytes: Array[Byte]): (Array[Byte], Int, Int) =
     try decodeRgbImpl(bytes)
     catch {
-      case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException =>
-        fail("truncated or structurally invalid stream")
+      case e @ (_: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException) =>
+        fail("truncated or structurally invalid stream", e)
     }
 
   private def decodeRgbImpl(bytes: Array[Byte]): (Array[Byte], Int, Int) = {

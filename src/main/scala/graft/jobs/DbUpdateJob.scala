@@ -212,7 +212,9 @@ object DbUpdateJob {
     val c = conf
     val t = curTime
     val r = round
-    val keyed = batchRows.flatMap(p => mapPage(p, opic)).rdd.map { m =>
+    // `.rdd` before the map side, so the UpdateMsgs (each page message
+    // carrying a whole WebPage) are never encoded into rows and back
+    val keyed = batchRows.rdd.flatMap(p => mapPage(p, opic)).map { m =>
       (UpdKey(m.url, if (m.isPage) Float.MaxValue else m.score,
         if (m.srcUrl == null) "" else m.srcUrl), m)
     }

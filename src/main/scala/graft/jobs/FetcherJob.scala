@@ -151,13 +151,14 @@ object FetcherJob {
     val r = round
     val n = conf.numPartitions
 
-    val batch = generated.filter(_.markers.get(Marks.GENERATE).contains(batchId))
+    // filtered on the RDD side: a typed Dataset filter decodes each page to
+    // test it, and `.rdd` would then decode the kept rows a second time
+    val batch = generated.rdd.filter(_.markers.get(Marks.GENERATE).contains(batchId))
 
     // salted host partitioning + deterministic arrival shuffle within
     // partitions (Kryo RDD shuffle — measured faster than a Dataset
     // exchange for map-heavy WebPage rows, see GeneratorJob.generate)
-    import org.apache.spark.sql.functions.col
-    val keyed = batch.rdd.map { p =>
+    val keyed = batch.map { p =>
       val pid = UrlPartitioner.getPartition(p.url, n, seed = r, mode = c.partitionMode)
       ((pid, arrivalKey(p.url, r), p.url), p)
     }

@@ -122,12 +122,13 @@ object GeneratorJob {
     val r = round
     val n = conf.numPartitions
 
-    val candidates: Dataset[(String, WebPage)] =
-      frontier.flatMap(p => candidate(p, c, t, filter, schedule, opic))
+    // leave the Dataset before the map side: a typed flatMap would encode
+    // each (url, page) candidate into a row only for `.rdd` to decode it
+    val candidates = frontier.rdd.flatMap(p => candidate(p, c, t, filter, schedule, opic))
 
     // salted host-hash partitioning; seed = round so hosts move between
     // rounds (URLPartitioner seed semantics)
-    val keyed = candidates.rdd.map { case (selUrl, page0) =>
+    val keyed = candidates.map { case (selUrl, page0) =>
       // strip payload bytes BEFORE the exchange: a fetched row selected for
       // refetch becomes a content-free version carrier in the reducer
       // anyway (rekey branch below), so shipping its content/text through

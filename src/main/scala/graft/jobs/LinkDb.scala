@@ -233,7 +233,11 @@ object LinkDb {
         // threshold both broadcasts would exceed broadcast capacity /
         // OOM the driver, where the plain shuffled anti-join below
         // degrades gracefully at any size.
-        val positives = candidates.filter(probe)
+        // materialized once, so the count gate and both joins below read
+        // one run of the edge aggregate and bloom probe; an eager local
+        // checkpoint is a persist whose blocks are released together with
+        // the returned plan, which no unpersist here could outlive
+        val positives = candidates.filter(probe).localCheckpoint()
         if (positives.count() <= broadcastMaxKeys) {
           val prunedStoreKeys = existingKeys.join(
             broadcast(positives.select(col("key"))), Seq("key"), "left_semi")

@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.table.SnapshotTable
 
 /** Structured Streaming over the crawl table.
   *
@@ -17,14 +20,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object CrawlStream {
 
   /** Stream of newly committed frontier rows (one micro-batch per snapshot
-    * append, roughly). `schemaFrom` supplies the fixed WebPage schema the
-    * file source needs. */
+    * append, roughly), with `snapshot_id` taken from the `sid=` directory as
+    * in SnapshotTable's reads. The schema is read once from the committed
+    * files, as the file source needs a fixed one. */
   def frontierStream(spark: SparkSession, tablePath: String): DataFrame = {
-    val schema = spark.read.parquet(s"$tablePath/data").schema
+    import SnapshotTable.{Lineage, PartitionCol}
+    val data = s"$tablePath/data"
+    val rows = spark.read.parquet(data).schema
+      .filterNot(f => f.name == PartitionCol || f.name == Lineage)
     spark.readStream
-      .schema(schema)
+      .schema(StructType(rows).add(PartitionCol, LongType))
+      .option("basePath", data)
       .option("maxFilesPerTrigger", "64")
-      .parquet(s"$tablePath/data/sid=*")
+      .parquet(s"$data/$PartitionCol=*")
+      .withColumnRenamed(PartitionCol, Lineage)
   }
 
   /** Running per-status counts over all rows ever committed — the streaming

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Iceberg-style snapshot table over plain Parquet.
   *
@@ -24,13 +25,32 @@ import org.apache.spark.sql.functions._
   * {{{
   *   <path>/data/sid=<id>/part-*.parquet   one directory per snapshot
   *   <path>/snapshots/<id>.json            manifest: id, parent, round, stage, base
-  *   <path>/HEAD                           current snapshot id (atomic rename)
+  *   <path>/HEAD                           hint: last committed id (atomic rename)
   * }}}
   *
   * A "base" snapshot is a compaction result: reads only consider snapshots
-  * from the newest base at-or-before the read snapshot onward. Rows carry
-  * `snapshot_id`; the current view resolves duplicate keys by latest
-  * snapshot_id — exactly the put-wins semantics of the reference store.
+  * from the newest base at-or-before the read snapshot onward. Every read
+  * exposes the lineage column `snapshot_id` (LongType); the current view
+  * resolves duplicate keys by latest snapshot_id — exactly the put-wins
+  * semantics of the reference store.
+  *
+  * `snapshot_id` is not stored in the files: reads take it from the
+  * `sid=<id>` directory as a partition value (as Iceberg keeps identity
+  * partition values in metadata, not per row). No per-commit value may
+  * enter a write plan: Spark inlines primitive literals into the generated
+  * Java source of a whole-stage-codegen stage, and its compiled-class cache
+  * is keyed by that source, so a `lit(id)` column would compile a fresh
+  * copy of the whole stage — row serializer included — on every commit and
+  * run it cold. Tables written when the files still carried the column
+  * read the same rows: the directory value wins, and the two are equal.
+  *
+  * The committed head is the highest manifest id; HEAD is only a hint, so a
+  * lost or stale HEAD can neither reuse an id (and overwrite a snapshot's
+  * data) nor hide committed history.
+  *
+  * All snapshots of a table share one row schema. The handle keeps the one
+  * it last wrote (a fresh handle infers it once, on first read) and passes
+  * it to every read, so a read plans without a footer-scanning job.
   */
 final class SnapshotTable(val path: String, val keyCol: String = "key",
     hadoopConf: Configuration = new Configuration()) {
@@ -40,8 +60,12 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
   private val root = new Path(path)
   private def fs: FileSystem = root.getFileSystem(hadoopConf)
   private def snapshotsDir = new Path(root, "snapshots")
-  private def dataDir(id: Long) = new Path(root, s"data/sid=$id")
+  private def dataRoot = new Path(root, "data")
+  private def dataDir(id: Long) = new Path(dataRoot, s"${SnapshotTable.PartitionCol}=$id")
   private def headFile = new Path(root, "HEAD")
+
+  /** Row schema without the lineage column; see the class doc. */
+  @volatile private var rowSchema: Option[StructType] = None
 
   private def readString(p: Path): String = {
     val in = fs.open(p)
@@ -69,21 +93,26 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
       .map(st => parseManifest(readString(st.getPath)))
       .sortBy(_.id)
 
+  /** The committed head: the highest manifest id, from the manifest file
+    * names (one listing, no manifest reads). */
   def head: Option[Long] =
-    if (fs.exists(headFile)) Some(readString(headFile).trim.toLong) else None
+    if (!fs.exists(snapshotsDir)) None
+    else fs.listStatus(snapshotsDir).iterator.map(_.getPath.getName)
+      .collect { case SnapshotTable.ManifestName(id) => id.toLong }.maxOption
 
   def headSnapshot: Option[Snapshot] = head.flatMap(id => snapshots.find(_.id == id))
 
-  /** Append a snapshot; returns its id. The df gains a `snapshot_id` lineage
-    * column. Manifest write + HEAD rename make the commit atomic-enough for
-    * single-writer crawl rounds (a crash before the HEAD move leaves an
-    * orphan data dir that is never referenced).
+  /** Append a snapshot; returns its id. A `snapshot_id` column of `df` is
+    * dropped: the snapshot's directory carries its id. The manifest write
+    * is the commit for single-writer crawl rounds (a crash before it leaves
+    * an orphan data dir that is never referenced); HEAD follows as a hint.
     */
   def append(df: DataFrame, round: Int, stage: String, base: Boolean = false): Long = {
-    val id = head.getOrElse(0L) + 1
     val parent = head.getOrElse(0L)
-    df.withColumn("snapshot_id", lit(id))
-      .write.mode("overwrite").parquet(dataDir(id).toString)
+    val id = parent + 1
+    val rows = df.drop(SnapshotTable.Lineage)
+    rows.write.mode("overwrite").parquet(dataDir(id).toString)
+    rowSchema = Some(rows.schema)
     fs.mkdirs(snapshotsDir)
     writeString(new Path(snapshotsDir, s"$id.json"),
       s"""{"id":$id,"parent":$parent,"round":$round,"stage":"$stage","base":$base}""")
@@ -114,14 +143,30 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
   /** All row versions visible at a snapshot (multi-version scan — the shape
     * generate/stats read, SURVEY.md §1.4). */
   def readAt(spark: SparkSession, atId: Long): DataFrame = {
-    val dirs = chainFor(atId).map(dataDir(_).toString)
-    if (dirs.isEmpty) throw new IllegalStateException(s"empty table at $path")
-    spark.read.parquet(dirs: _*)
+    val ids = chainFor(atId)
+    if (ids.isEmpty) throw new IllegalStateException(s"empty table at $path")
+    scan(spark, ids)
   }
 
   /** Just the rows written by one snapshot (a stage's delta). */
-  def readSnapshot(spark: SparkSession, id: Long): DataFrame =
-    spark.read.parquet(dataDir(id).toString)
+  def readSnapshot(spark: SparkSession, id: Long): DataFrame = scan(spark, Seq(id))
+
+  /** The rows of the given snapshots with `snapshot_id` taken from their
+    * `sid=` directories. A stored `snapshot_id` column (older layout) is
+    * left unread: the known schema does not name it. */
+  private def scan(spark: SparkSession, ids: Seq[Long]): DataFrame = {
+    val dirs = ids.map(dataDir(_).toString)
+    val schema = rowSchema.getOrElse {
+      val inferred = StructType(
+        spark.read.parquet(dirs.last).schema.filterNot(_.name == SnapshotTable.Lineage))
+      rowSchema = Some(inferred)
+      inferred
+    }
+    spark.read.schema(schema.add(SnapshotTable.PartitionCol, LongType))
+      .option("basePath", dataRoot.toString)
+      .parquet(dirs: _*)
+      .withColumnRenamed(SnapshotTable.PartitionCol, SnapshotTable.Lineage)
+  }
 
   /** The snapshot id of a given (round, stage) commit, if present. */
   def snapshotFor(round: Int, stage: String): Option[Long] =
@@ -133,7 +178,7 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
   /** Latest-key-wins resolution = the reference store's put/upsert
     * semantics: for each key only the most recent write survives. */
   def currentView(spark: SparkSession): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("snapshot_id").desc)
+    val w = Window.partitionBy(col(keyCol)).orderBy(col(SnapshotTable.Lineage).desc)
     readAll(spark)
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
@@ -144,7 +189,7 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
     * number of deltas a read must merge — the Iceberg rewrite/compact
     * analogue; run every k rounds at scale. */
   def compact(spark: SparkSession, round: Int): Long = {
-    val resolved = currentView(spark).drop("snapshot_id").cache()
+    val resolved = currentView(spark).drop(SnapshotTable.Lineage).cache()
     resolved.count() // materialize before the new snapshot dir is written
     val id = append(resolved, round, "compact", base = true)
     resolved.unpersist()
@@ -169,4 +214,12 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
 
   /** Drop the whole table (reference: DbCleanerJob store.deleteSchema, A10). */
   def drop(): Unit = fs.delete(root, true)
+}
+
+object SnapshotTable {
+  /** The lineage column every read exposes. */
+  val Lineage = "snapshot_id"
+  /** The partition directory key that stores it: `data/sid=<id>/`. */
+  val PartitionCol = "sid"
+  private val ManifestName = """(\d+)\.json""".r
 }

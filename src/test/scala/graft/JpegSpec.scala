@@ -177,6 +177,13 @@ class JpegSpec extends AnyFunSuite {
         JpegCodec.decodeRgb(good.take(cut)))
       assert(e.getMessage.startsWith("corrupt JPEG"), s"cut=$cut: $e")
     }
+    // a residual out-of-bounds access keeps its exception as the cause: a
+    // DQT naming table 15 (of 0..3) passes the header walk's bounds checks
+    val dqt = good.indices.find(i => (good(i) & 0xff) == 0xff && (good(i + 1) & 0xff) == 0xdb).get
+    val badTable = good.updated(dqt + 4, 0x0f.toByte)
+    val wrapped = intercept[IllegalArgumentException](JpegCodec.decodeRgb(badTable))
+    assert(wrapped.getMessage.startsWith("corrupt JPEG"))
+    assert(wrapped.getCause.isInstanceOf[ArrayIndexOutOfBoundsException], wrapped.getCause)
     // ImageSynth routes JPEG payloads to the from-scratch decoder
     val (dec, w, h) = ImageSynth.decodeRgb(good)
     assert((w, h) == ((16, 16)) && dec.length == 16 * 16 * 3)

@@ -605,5 +605,20 @@ class OpsSpec extends AnyFunSuite {
       val wrows = spark.sql("select * from fetch_rate_live").collect()
       assert(wrows.nonEmpty, "watermark should have closed round-1 windows")
     } finally wq.stop()
+
+    // streamed rows carry the snapshot id of their sid= directory
+    import org.apache.spark.sql.functions.col
+    val lq = graft.streaming.CrawlStream.frontierStream(spark, dir)
+      .groupBy(col("snapshot_id")).count()
+      .writeStream.format("memory").queryName("stream_lineage").outputMode("complete").start()
+    try {
+      lq.processAllAvailable()
+      val streamed = spark.sql("select * from stream_lineage").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val table = new graft.table.SnapshotTable(dir)
+      val committed = table.readAll(spark).groupBy(col("snapshot_id")).count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(streamed == committed)
+    } finally lq.stop()
   }
 }
