@@ -87,7 +87,7 @@ final class Crawl(
     val sid = table.snapshotFor(round, "fetch")
       .getOrElse(throw new IllegalStateException(s"fetch snapshot missing for round $round"))
     val batch = table.readSnapshot(spark, sid).drop("snapshot_id").as[WebPage]
-    var updated = DbUpdateJob.update(spark, batch, conf, curTimeOf(round), round)
+    val updated = DbUpdateJob.update(spark, batch, conf, curTimeOf(round), round)
     if (conf.filterSeenNewPages) {
       // scale path: the partitioned bloom bank prefilters discovered urls;
       // bloom-positives probe the store and merge state-preservingly
@@ -98,9 +98,10 @@ final class Crawl(
       // side is the RAW multi-version frame: latest-key-wins resolution
       // happens after pruning to the positive keys, so no full
       // latest-per-key window materializes per round.
-      // the merge consumes `updated` three ways (batch rows, bloom-negative
-      // new pages, bloom-positive store join); persist so the update
-      // shuffle+reduce runs once, not once per branch
+      // The merge reads `updated` three times: its positive-key aggregate,
+      // then the pass-through rows and the positives of the write. Persist
+      // it so the update shuffle and reduce run once, inside the aggregate
+      // job, and the write reads the cache.
       val u = updated.persist(StorageLevel.MEMORY_AND_DISK)
       val seen = ensureSeenBank()
       val merged = DbUpdateJob.mergeSeenNewPagesOverStore(spark, u, seen,

@@ -223,27 +223,13 @@ object DbUpdateJob {
     spark.createDataset(sorted.mapPartitions(it => reducePartition(it.map(_._2), c, t, r)))
   }
 
-  /** Scale path for discovered-URL handling (SURVEY.md C10/D3, north_rule):
-    * at 10^10 frontier scale, "is this outlink new?" must not rescan the
-    * store. The partitioned bloom filter (built via treeAggregate over the
-    * store's keys) prefilters candidates; only bloom-positives join the
-    * store. False positives can never drop URLs (the join is exact), and
-    * false negatives don't exist (bloom property).
-    *
-    * Semantics upgrade over the reference: Nutch's reducer REPLACES an
-    * existing-but-not-generated row with a fresh page when an inlink
-    * arrives (same-key Gora put), losing its schedule state and score
-    * history. Here the candidate's inlinked cash MERGES into the existing
-    * row (score/cash accumulate per the OPIC update rule, distance and
-    * inlinks improve) — state-preserving. The byte-faithful behavior
-    * remains the default (filterSeenNewPages = false).
-    */
   /** Counters for the bloom-gated merge, exposed so callers (and tests) can
     * observe that the store join saw only the bloom-positive slice.
-    * Populated by exact counts over a persisted candidate set (NOT by
-    * incrementing inside filter closures, which Spark re-executes on stage
-    * retry and once per action over an unpersisted plan — the round-2
-    * accumulator-accuracy finding), so the values are stable under retries. */
+    * Filled on the driver from the exact counts the positive-key aggregate
+    * returns (NOT by incrementing inside filter closures, which Spark
+    * re-executes on stage retry and once per action over an unpersisted
+    * plan — the round-2 accumulator-accuracy finding), so the values are
+    * stable under retries. */
   final case class SeenMergeMetrics(
       candidates: org.apache.spark.util.LongAccumulator,
       bloomPositives: org.apache.spark.util.LongAccumulator)
@@ -254,137 +240,125 @@ object DbUpdateJob {
       spark.sparkContext.longAccumulator("seenMerge.bloomPositives"))
   }
 
-  /** The three delta-sized streams of the discovered-URL merge:
-    * batch rows, bloom-negative new pages, bloom-positive candidates. */
-  private def splitCandidates(spark: SparkSession, updated: Dataset[WebPage],
-      seen: BloomSeen, metrics: Option[SeenMergeMetrics])
-      : (Dataset[WebPage], Dataset[WebPage], Dataset[(String, WebPage)], Long) = {
-    import spark.implicits._
-    val b = spark.sparkContext.broadcast(seen)
-    // rows produced by the new-page branch carry no pipeline marks
-    val isNew = (p: WebPage) =>
-      !p.markers.contains(Marks.GENERATE) && !p.markers.contains(Marks.INJECT)
-    val fromBatch = updated.filter(p => !isNew(p))
-    val candidates = updated.filter(isNew)
-    // exact observability counts on a persisted candidate set (delta-sized;
-    // only when requested): immune to stage retry / multi-action recompute
-    metrics.foreach { m =>
-      val c = candidates.persist()
-      m.candidates.add(c.count())
-      m.bloomPositives.add(c.filter(p => b.value.mightContain(p.key)).count())
-      // counts taken — release, or every metrics-enabled update round pins
-      // a dead delta-sized cache for the life of the session (downstream
-      // branches re-read `updated`, which the caller persists)
-      c.unpersist()
+  /** Rows produced by the reduce's new-page branch carry no pipeline marks. */
+  private def isDiscovered(p: WebPage): Boolean =
+    !p.markers.contains(Marks.GENERATE) && !p.markers.contains(Marks.INJECT)
+
+  /** Exact candidate and bloom-positive counts plus the positive keys, built
+    * by one aggregate. `keys` turns None once it holds more than `cap`
+    * keys, so no task and not the driver ever hold more keys than the
+    * broadcast that would carry them. */
+  private final class PositiveKeys(cap: Long) extends Serializable {
+    var candidates = 0L
+    var positives = 0L
+    var keys: Option[scala.collection.mutable.HashSet[String]] =
+      Some(scala.collection.mutable.HashSet.empty)
+
+    def add(key: String, positive: Boolean): PositiveKeys = {
+      candidates += 1
+      if (positive) {
+        positives += 1
+        keys.foreach(_ += key)
+        bound()
+      }
+      this
     }
-    // bloom-negative => definitely new, no join needed
-    val definitelyNew = candidates.filter(p => !b.value.mightContain(p.key))
-    // bloom-positive ONLY => join the store: merge into hits, keep misses
-    // (bloom false positives) as new. Joining all candidates would both
-    // duplicate the bloom-negatives (they'd flow through definitelyNew AND
-    // the null branch below) and defeat the prefilter's point: at 10^10
-    // keys the store join must see only the ~fpp fraction of candidates.
-    val maybeSeen = candidates
-      .filter(p => b.value.mightContain(p.key))
-      .map(p => (p.key, p))
-    // the count and re-derivations of maybeSeen are passes over `updated`,
-    // which callers persist (Crawl.update) — cache reads, not recomputes
-    (fromBatch, definitelyNew, maybeSeen, maybeSeen.count())
+
+    def merge(o: PositiveKeys): PositiveKeys = {
+      candidates += o.candidates
+      positives += o.positives
+      keys = for (a <- keys; b <- o.keys) yield a ++= b
+      bound()
+      this
+    }
+
+    private def bound(): Unit = if (keys.exists(_.size > cap)) keys = None
   }
 
-  /** State-preserving merge of bloom-positive candidates into their
-    * existing rows (see mergeSeenNewPages doc for the semantics upgrade). */
-  private def mergePositives(fromBatch: Dataset[WebPage],
-      definitelyNew: Dataset[WebPage], maybeSeen: Dataset[(String, WebPage)],
-      existingKeyed: Dataset[(String, WebPage)]): Dataset[WebPage] = {
-    val session = fromBatch.sparkSession
-    import session.implicits._
-    val merged = maybeSeen
-      .joinWith(existingKeyed, maybeSeen("_1") === existingKeyed("_1"), "left_outer")
-      .map { case ((_, cand), old0) =>
-        if (old0 == null) cand
-        else {
-          val old = old0._2
-          // cand was built as initialScore(1.0) + updateScore(inlinked):
-          // cand.score = 1 + sum(inlink cash)
-          val inlinkCash = cand.score - 1.0f
-          val newScore = old.score + inlinkCash
-          val oldDist = old.markers.get(Marks.DISTANCE).map(_.toInt).getOrElse(Int.MaxValue)
-          val candDist = cand.markers.get(Marks.DISTANCE).map(_.toInt).getOrElse(Int.MaxValue)
-          val withDist =
-            if (candDist < oldDist) Marks.put(old, Marks.DISTANCE, candDist.toString) else old
-          withDist.copy(
-            score = newScore,
-            cash = old.cash + newScore,
-            inlinks = old.inlinks ++ cand.inlinks)
-        }
-      }
-    fromBatch.union(definitelyNew).union(merged)
+  /** Fold a bloom-positive discovered page into the store's newest version
+    * of its key: `cand` was built as initialScore(1.0) + updateScore
+    * (inlinked), so its inlink cash is `cand.score - 1`; score and cash
+    * accumulate by the OPIC update rule, distance and inlinks improve, and
+    * every other field (schedule state first) stays the stored row's. */
+  private def mergeInto(old: WebPage, cand: WebPage): WebPage = {
+    val newScore = old.score + (cand.score - 1.0f)
+    val oldDist = old.markers.get(Marks.DISTANCE).map(_.toInt).getOrElse(Int.MaxValue)
+    val candDist = cand.markers.get(Marks.DISTANCE).map(_.toInt).getOrElse(Int.MaxValue)
+    val withDist =
+      if (candDist < oldDist) Marks.put(old, Marks.DISTANCE, candDist.toString) else old
+    withDist.copy(score = newScore, cash = old.cash + newScore,
+      inlinks = old.inlinks ++ cand.inlinks)
   }
 
-  def mergeSeenNewPages(spark: SparkSession, updated: Dataset[WebPage],
-      seen: BloomSeen, existingRows: Dataset[WebPage],
-      metrics: Option[SeenMergeMetrics] = None,
-      broadcastMaxKeys: Long = 5000000L): Dataset[WebPage] = {
-    import org.apache.spark.sql.functions.broadcast
-    import spark.implicits._
-    val (fromBatch, definitelyNew, maybeSeen, nPositives) =
-      splitCandidates(spark, updated, seen, metrics)
-    // The store side must NEVER shuffle: a plain equi-join here plans a
-    // sort-merge join that exchanges and sorts the WHOLE store every round
-    // (the 10^10-row side), for a delta-sized probe set. Instead the
-    // positive keys broadcast into a left-semi scan of the store (narrow,
-    // one pass, no sort — the putIfAbsent point-probe analogue), and the
-    // outer merge join then runs between two delta-sized sets. Guarded:
-    // if the positive set outgrows broadcast capacity, fall back to the
-    // shuffle join (correct at any size, just not the cluster-fast path).
-    // Honest A/B (4M-row store, 120k candidates, local[32], min-of-3):
-    // SMJ 2.0 s vs broadcast-semi 3.0 s — LOCAL mode's tmpfs shuffle hides
-    // the cost this shape exists to avoid; on a cluster the SMJ writes the
-    // whole store to shuffle (AQE's SMJ->BHJ conversion still pays the
-    // shuffle WRITE) and sorts it, while the semi path is one narrow scan.
-    // The choice optimizes the 1000-executor case, not the sandbox.
-    val existingKeyed: Dataset[(String, WebPage)] =
-      if (nPositives <= broadcastMaxKeys) {
-        val posKeys = maybeSeen.map(_._1).toDF("key")
-        existingRows.join(broadcast(posKeys), Seq("key"), "left_semi")
-          .as[WebPage].map(p => (p.key, p))
-      } else {
-        existingRows.map(p => (p.key, p))
-      }
-    mergePositives(fromBatch, definitelyNew, maybeSeen, existingKeyed)
-  }
-
-  /** mergeSeenNewPages over the RAW multi-version snapshot frame (columns =
-    * WebPage + `snapshot_id`) instead of a pre-resolved view: the
-    * latest-key-wins resolution happens AFTER pruning to the positive keys,
-    * so the update round never materializes the full latest-per-key window
-    * — at 10^10 rows that window is a whole-store shuffle+sort per round,
-    * paid to serve a delta-sized probe set. Here the store cost is ONE
-    * narrow scan (the broadcast semi join), and the window runs over the
-    * pruned hits only (delta-sized). Falls back to resolving everything
-    * when the positive set outgrows broadcast capacity. */
+  /** Scale path for discovered-URL handling (SURVEY.md C10/D3, north_rule):
+    * at 10^10 frontier scale, "is this outlink new?" must not rescan the
+    * store. The partitioned bloom bank prefilters candidates; only
+    * bloom-positives meet the store. False positives can never drop URLs
+    * (the store match is exact), and false negatives don't exist (bloom
+    * property).
+    *
+    * Semantics upgrade over the reference: Nutch's reducer REPLACES an
+    * existing-but-not-generated row with a fresh page when an inlink
+    * arrives (same-key Gora put), losing its schedule state and score
+    * history. Here the candidate's inlinked cash MERGES into the existing
+    * row ([[mergeInto]]) — state-preserving. The byte-faithful behavior
+    * remains the default (filterSeenNewPages = false).
+    *
+    * `store` is the RAW multi-version snapshot frame (columns = WebPage +
+    * `snapshot_id`), not a resolved view: latest-key-wins is resolved per
+    * positive key, after pruning, so no round materializes the full
+    * latest-per-key window. The plan:
+    *  1. one bounded aggregate over `updated` counts the candidates and
+    *     collects the bloom-positive keys, or gives up on the set past
+    *     `broadcastMaxKeys` (when the caller persists `updated`, this job
+    *     also runs its shuffle and fills the cache);
+    *  2. the store is filtered by membership in a broadcast of that set —
+    *     one narrow scan, the putIfAbsent point-probe analogue;
+    *  3. one cogroup of the positives with the pruned store rows takes
+    *     each key's newest version and merges into it; a miss (a bloom
+    *     false positive) stays a new page. Past the cap the same cogroup
+    *     runs against the whole store, which then shuffles once;
+    *  4. the other rows join the merged ones narrowly, coalesced to
+    *     `updated`'s partition count, so a write runs one task per
+    *     partition. */
   def mergeSeenNewPagesOverStore(spark: SparkSession, updated: Dataset[WebPage],
       seen: BloomSeen, store: org.apache.spark.sql.DataFrame,
       metrics: Option[SeenMergeMetrics] = None,
       broadcastMaxKeys: Long = 5000000L): Dataset[WebPage] = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{broadcast, col, row_number}
+    import org.apache.spark.sql.Encoder
+    import org.apache.spark.sql.functions.{col, struct, udf}
     import spark.implicits._
-    val (fromBatch, definitelyNew, maybeSeen, nPositives) =
-      splitCandidates(spark, updated, seen, metrics)
-    val latest = Window.partitionBy(col("key")).orderBy(col("snapshot_id").desc)
-    def resolve(df: org.apache.spark.sql.DataFrame): Dataset[(String, WebPage)] =
-      df.withColumn("__rn", row_number().over(latest))
-        .where(col("__rn") === 1).drop("__rn", "snapshot_id")
-        .as[WebPage].map(p => (p.key, p))
-    val existingKeyed: Dataset[(String, WebPage)] =
-      if (nPositives <= broadcastMaxKeys) {
-        val posKeys = maybeSeen.map(_._1).toDF("key")
-        resolve(store.join(broadcast(posKeys), Seq("key"), "left_semi"))
-      } else {
-        resolve(store)
+    val sc = spark.sparkContext
+    val b = sc.broadcast(seen)
+    val rows = updated.rdd
+    val n = rows.getNumPartitions
+    val positive = (p: WebPage) => isDiscovered(p) && b.value.mightContain(p.key)
+    val found = rows.treeAggregate(new PositiveKeys(broadcastMaxKeys))(
+      (acc, p) => if (isDiscovered(p)) acc.add(p.key, b.value.mightContain(p.key)) else acc,
+      _ merge _)
+    metrics.foreach { m =>
+      m.candidates.add(found.candidates)
+      m.bloomPositives.add(found.positives)
+    }
+    val rest = rows.filter(p => !positive(p))
+    if (found.positives == 0) return spark.createDataset(rest)
+
+    val probed = found.keys.fold(store) { keys =>
+      val kb = sc.broadcast(keys)
+      val known = udf((k: String) => kb.value.contains(k))
+      store.where(known(col("key")))
+    }
+    val pageCols = implicitly[Encoder[WebPage]].schema.map(f => col(f.name))
+    val versions = probed
+      .select(col("snapshot_id").as("_1"), struct(pageCols: _*).as("_2"))
+      .as[(Long, WebPage)].rdd
+      .map { case (sid, p) => (p.key, (sid, p)) }
+    val merged = rows.filter(positive).map(p => (p.key, p))
+      .cogroup(versions, new org.apache.spark.HashPartitioner(n))
+      .flatMap { case (_, (cands, olds)) =>
+        val newest = olds.reduceOption((x, y) => if (y._1 > x._1) y else x).map(_._2)
+        cands.map(c => newest.fold(c)(mergeInto(_, c)))
       }
-    mergePositives(fromBatch, definitelyNew, maybeSeen, existingKeyed)
+    spark.createDataset(rest.union(merged).coalesce(n))
   }
 }

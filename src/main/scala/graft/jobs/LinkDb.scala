@@ -226,8 +226,9 @@ object LinkDb {
         // into a left-semi scan of the store so the store never shuffles
         // (the mergeSeenNewPagesOverStore shape), then confirms with a
         // delta x delta anti-join. GATED on the maybe-set's actual count
-        // (one extra pass over the candidate aggregate — the same guard
-        // DbUpdateJob.mergeSeenNewPages applies): in a dense web graph,
+        // (one extra pass over the candidate aggregate — the bound
+        // DbUpdateJob.mergeSeenNewPagesOverStore puts on its positive-key
+        // set): in a dense web graph,
         // true hits (links to already-known pages) can DOMINATE a round's
         // candidates, so "delta-sized" is not a given — above the
         // threshold both broadcasts would exceed broadcast capacity /

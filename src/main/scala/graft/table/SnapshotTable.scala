@@ -86,21 +86,26 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
 
   def exists: Boolean = fs.exists(snapshotsDir)
 
-  def snapshots: Seq[Snapshot] =
+  /** Ids of the committed manifests: one listing of `snapshots/`. */
+  private def manifestIds: Seq[Long] =
     if (!fs.exists(snapshotsDir)) Seq.empty
-    else fs.listStatus(snapshotsDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map(st => parseManifest(readString(st.getPath)))
-      .sortBy(_.id)
+    else fs.listStatus(snapshotsDir).toSeq.map(_.getPath.getName)
+      .collect { case SnapshotTable.ManifestName(id) => id.toLong }
+
+  /** Manifests this handle has parsed. A manifest is written once, at
+    * commit, so each is read at most once per handle; the listing still
+    * runs per call, so snapshots committed through another handle show. */
+  private val parsed = scala.collection.concurrent.TrieMap.empty[Long, Snapshot]
+
+  def snapshots: Seq[Snapshot] =
+    manifestIds.sorted.map(id => parsed.getOrElseUpdate(id,
+      parseManifest(readString(new Path(snapshotsDir, s"$id.json")))))
 
   /** The committed head: the highest manifest id, from the manifest file
     * names (one listing, no manifest reads). */
-  def head: Option[Long] =
-    if (!fs.exists(snapshotsDir)) None
-    else fs.listStatus(snapshotsDir).iterator.map(_.getPath.getName)
-      .collect { case SnapshotTable.ManifestName(id) => id.toLong }.maxOption
+  def head: Option[Long] = manifestIds.maxOption
 
-  def headSnapshot: Option[Snapshot] = head.flatMap(id => snapshots.find(_.id == id))
+  def headSnapshot: Option[Snapshot] = snapshots.lastOption
 
   /** Append a snapshot; returns its id. A `snapshot_id` column of `df` is
     * dropped: the snapshot's directory carries its id. The manifest write
@@ -116,6 +121,7 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
     fs.mkdirs(snapshotsDir)
     writeString(new Path(snapshotsDir, s"$id.json"),
       s"""{"id":$id,"parent":$parent,"round":$round,"stage":"$stage","base":$base}""")
+    parsed(id) = Snapshot(id, parent, round, stage, base)
     val tmp = new Path(root, ".HEAD.tmp")
     writeString(tmp, id.toString)
     fs.delete(headFile, false)
@@ -212,8 +218,12 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
       .map(s => (s.round, s.stage))
   }
 
-  /** Drop the whole table (reference: DbCleanerJob store.deleteSchema, A10). */
-  def drop(): Unit = fs.delete(root, true)
+  /** Drop the whole table (reference: DbCleanerJob store.deleteSchema, A10).
+    * Ids restart at 1 afterwards, so the parsed manifests go too. */
+  def drop(): Unit = {
+    fs.delete(root, true)
+    parsed.clear()
+  }
 }
 
 object SnapshotTable {

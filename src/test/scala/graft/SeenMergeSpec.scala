@@ -87,6 +87,7 @@ class SeenMergeSpec extends AnyFunSuite {
   test("store join sees only the bloom-positive candidate slice, once each") {
     import graft.jobs.DbUpdateJob
     import graft.seen.BloomSeen
+    import org.apache.spark.sql.functions.lit
     val existing = (1 to 5).map(i =>
       WebPage(key = s"k$i", url = s"http://h.test/e$i", score = 2.0f, cash = 1.0f))
     val seen = BloomSeen.empty(numParts = 4, expectedItems = 1000, fpp = 0.01)
@@ -100,8 +101,9 @@ class SeenMergeSpec extends AnyFunSuite {
       markers = Map(Marks.GENERATE -> "b-1")))
     val updated = spark.createDataset(batch ++ candSeen ++ candNew)
     val metrics = DbUpdateJob.SeenMergeMetrics(spark)
-    val out = DbUpdateJob.mergeSeenNewPages(spark, updated, seen,
-      spark.createDataset(existing), Some(metrics)).collect()
+    val store = spark.createDataset(existing).toDF().withColumn("snapshot_id", lit(1L))
+    val out = DbUpdateJob.mergeSeenNewPagesOverStore(spark, updated, seen, store,
+      Some(metrics)).collect()
 
     // exactly one output row per input key, nothing lost, nothing doubled
     val keys = out.map(_.key).toSeq
@@ -120,5 +122,49 @@ class SeenMergeSpec extends AnyFunSuite {
     val m = out.find(_.key == "k1").get
     assert(math.abs(m.score - 2.5f) < 1e-6, s"score merged wrong: ${m.score}")
     assert(m.cash > 1.0f)
+  }
+
+  test("past the positive-key cap the merge falls back to the whole store, row for row") {
+    import graft.jobs.DbUpdateJob
+    import graft.seen.BloomSeen
+    import org.apache.spark.sql.functions.lit
+    val vOld = WebPage(key = "k1", url = "http://h.test/e1", score = 2.0f, cash = 1.0f)
+    val vNew = WebPage(key = "k1", url = "http://h.test/e1", score = 9.0f, cash = 3.0f,
+      fetchTime = 42L)
+    val other = WebPage(key = "k2", url = "http://h.test/e2", score = 5.0f)
+    val store = spark.createDataset(Seq(vOld, other)).toDF().withColumn("snapshot_id", lit(3L))
+      .unionByName(spark.createDataset(Seq(vNew)).toDF().withColumn("snapshot_id", lit(7L)))
+    val seen = BloomSeen.empty(numParts = 4, expectedItems = 1000, fpp = 0.01)
+    // "fp" is in the bank but not in the store: a bloom false positive
+    Seq("k1", "k2", "fp").foreach(seen.add)
+    assert(!seen.mightContain("neg"))
+    val discovered = Seq("k1", "fp", "neg").map(k =>
+      WebPage(key = k, url = s"http://h.test/$k", score = 1.5f,
+        markers = Map(Marks.DISTANCE -> "1")))
+    val batch = Seq(
+      WebPage(key = "g1", url = "http://h.test/g1", markers = Map(Marks.GENERATE -> "b-1")),
+      WebPage(key = "i1", url = "http://h.test/i1", markers = Map(Marks.INJECT -> "y")))
+    val updated = spark.createDataset(batch ++ discovered).repartition(3)
+    def run(cap: Long): (Seq[WebPage], Long, Long) = {
+      val m = DbUpdateJob.SeenMergeMetrics(spark)
+      val out = DbUpdateJob.mergeSeenNewPagesOverStore(spark, updated, seen, store, Some(m),
+        broadcastMaxKeys = cap).collect().toSeq.sortBy(_.key)
+      (out, m.candidates.value, m.bloomPositives.value)
+    }
+    val (pruned, candidates, positives) = run(5000000L)
+    val (fallback, candidates0, positives0) = run(0L)
+    assert(fallback == pruned)
+    assert((candidates, positives) == ((3L, 2L)))
+    assert((candidates0, positives0) == ((candidates, positives)))
+    val byKey = pruned.map(p => p.key -> p).toMap
+    assert(byKey.keySet == Set("g1", "i1", "k1", "fp", "neg"))
+    // the newest version (snapshot 7) won, its schedule state kept
+    assert(math.abs(byKey("k1").score - 9.5f) < 1e-6, s"merged wrong: ${byKey("k1").score}")
+    assert(byKey("k1").fetchTime == 42L)
+    assert(byKey("k1").markers.get(Marks.DISTANCE).contains("1"))
+    // the false positive and the bloom negative stay new pages, untouched
+    assert(byKey("fp") == discovered(1))
+    assert(byKey("neg") == discovered(2))
+    assert(byKey("g1") == batch.head && byKey("i1") == batch(1))
   }
 }

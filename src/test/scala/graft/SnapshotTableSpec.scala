@@ -140,4 +140,24 @@ class SnapshotTableSpec extends AnyFunSuite {
     // HEAD is written again as a hint
     assert(new java.io.File(s"$dir/HEAD").exists())
   }
+
+  test("each handle parses a manifest once and still sees other handles' commits") {
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir("snapmanifests")
+    val writer = new SnapshotTable(dir)
+    threeSnapshots(writer)
+    val reader = new SnapshotTable(dir)
+    assert(reader.snapshots.map(s => (s.id, s.stage)) ==
+      Seq((1L, "inject"), (2L, "generate"), (3L, "update")))
+    // a parsed manifest is not read again: the reader keeps its parse
+    // even when the file under it turns unreadable
+    java.nio.file.Files.writeString(new java.io.File(s"$dir/snapshots/1.json").toPath, "{")
+    assert(reader.snapshots.head.stage == "inject")
+    // a snapshot committed through another handle shows on the next call
+    val id = writer.append(Seq(("k4", "d", 4)).toDF("key", "v", "r"), 2, "generate")
+    assert(reader.snapshots.last == reader.Snapshot(id, 3L, 2, "generate", base = false))
+    assert(reader.snapshotFor(2, "generate").contains(id))
+    assert(reader.lastCompleted.contains((2, "generate")))
+    assert(rowsOf(reader.readAll(spark)).last == s"k4|d|4|$id")
+  }
 }
